@@ -1,11 +1,15 @@
-"""Bench harness: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+"""Registry bench: every query in ``__spark_entry__.queries()`` at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], each run through the
+``noop`` sink (``count()`` lets Catalyst prune deterministic projections),
+best of $SPARK_GRAFT_BENCH_REPS runs.
 
-Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
+Cores default to this process's affinity mask and the driver heap
+($SPARK_GRAFT_MEM) to half of MemTotal. Prints ONE JSON line:
+  {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
+   "sf": ..., "cpus": ..., "probe_speedup": ..., "probe_ratio": ...}
 
-Also reports pages/sec for the flagship spatial-join + tile-assignment
-pipeline (the BASELINE.json throughput metric) inside "queries" as
-"pipeline_pages_per_sec" (informational; "value" stays total seconds).
+The flagship spatial-join + tile-assignment pages/s is measured by
+``python3 perfbench/run.py --workload flagship``, not here.
 """
 
 from __future__ import annotations
@@ -17,179 +21,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.scaling_bench import cpu_scaling_probe, host_driver_memory  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "2000000"))
-
-HEADLINE = [
-    "geo_cell_assign",
-    "geo_cell_histogram",
-    "geo_spatial_join",
-    "geo_polyline_join",
-    "geo_zonal_stats",
-    "geo_knn",
-    "geo_tile_math",
-    "rel_pricing_summary",
-    "rel_revenue_by_nation",
-    "rel_topk_per_group",
-    "rel_events_hourly",
-    "text_token_stats",
-    "text_quality_gate",
-    "dedup_minhash_lsh",
-    "emb_knn_cosine",
-]
-
-# r2 additions, timed and reported but EXCLUDED from the headline total so
-# `value` stays protocol-identical to BENCH_r01 (round-over-round
-# regressions visible on the same 15-query + pipeline basis).
-EXTRA = [
-    "geo_spatial_join_holes",
-    "geo_zonal_area",
-    "geo_zonal_area_weighted",
-    "geo_s2_parity",
-    "geo_knn_exact",
-    "emb_near_dup",
-    "geo_clean_ring",
-    "osm_s2_split",
-    "geom_ground_mesh",
-    "mm_image_meta",
-    # r3 additions
-    "geo_poly_boolean",
-    "geom_scene_stats",
-    "geo_ribbon_vertices",
-    "rel_range_join",
-    "text_gopher_repetition",
-    "text_tfidf_topterms",
-    "text_ngram_topk",
-    "rel_funnel",
-    "text_hash_split",
-    "dedup_shingle_coverage",
-    "text_decontaminate",
-    "text_stratified_sample",
-    "rel_source_mix",
-    "rel_hll_distinct",
-    "rel_kmv_distinct",
-    "web_url_parse",
-    "web_host_stats",
-    "text_pii_redact",
-    "rel_cm_freq",
-    "web_pagerank",
-    "text_lm_score",
-    "text_length_quantiles",
-    "web_snapshot_diff",
-    "corpus_prep_funnel",
-    "text_paragraph_dedup",
-    "web_bm25_topk",
-    "web_bloom_membership",
-    # r4 additions
-    "geom_attr_stats",
-    "text_line_dedup",
-    "web_recrawl_dedup",
-    "text_pack_sequences",
-    "text_normalize",
-    "text_classifier_score",
-    "geo_raster_regions",
-    "geo_tile_pyramid",
-    "rel_pivot",
-    "rel_unpivot",
-    "dedup_jaccard_exact",
-    # r5 additions
-    "geo_hex_assign",
-    "geo_hex_histogram",
-    "geo_rasterize",
-    "web_host_cap",
-    "text_ccnet_buckets",
-    "web_link_hostgraph",
-    "web_blocklist_filter",
-    "text_exactsubstr_cut",
-    "text_importance_sample",
-    "emb_semdedup",
-    "warc_ingest_stats",
-    "web_anchor_text",
-    "text_bpe_merges",
-    "web_robots_filter",
-    "text_chunk_windows",
-    "web_host_quality_ci",
-    "web_surt_keys",
-    "mm_cdc_chunks",
-    "mm_cdc_dedup_ratio",
-    "web_fetch_schedule",
-    "geo_geohash_assign",
-    "geo_dp_simplify",
-    "geo_quadkey_assign",
-    "geo_spherical_area",
-    "web_main_content",
-    "web_page_metadata",
-    "web_canonical_dedup",
-    "text_sentences",
-    "text_zipf_fit",
-    "web_registered_domain",
-    "text_readability",
-    "text_vocab_growth",
-    "web_sitemap_urls",
-    "web_http_headers",
-    "web_language_fusion",
-    "web_publish_date",
-    "text_script_profile",
-    "web_crawl_hygiene",
-    "web_outlink_features",
-    "web_redirect_resolve",
-    "geo_ring_perimeter",
-    "text_heavy_hitters",
-    "geo_destination_point",
-    "geo_cell_kring",
-    "text_winnow_fingerprints",
-    "text_pmi_pairs",
-    "rel_grouping_sets",
-    "emb_pq_codes",
-    "stream_attribution_batch",
-    "emb_pq_adc_topk",
-    "text_edit_neardup",
-    "geo_convex_hull",
-    "rel_weighted_sample",
-    "web_label_propagation",
-    # r5 closing session
-    "text_bpe_encode",
-    "geo_track_segments",
-    "geo_od_matrix",
-    "geo_geofence_dwell",
-    "geo_colocation_pairs",
-    "geo_st_cube",
-    "rel_anomaly_hours",
-    "warc_wet_roundtrip",
-]
-
-
-def _cpu_probe() -> dict:
-    """Same-window pure-CPU health probe, embedded in the artifact so a
-    throttled-host BENCH_r{N}.json is self-diagnosing (VERDICT r3 required
-    forensic cross-referencing of BENCH/RUNS.md to adjudicate a phantom
-    regression). Reuses the md5 kernel from tools/scaling_bench.py:
-
-    * ``probe_sec_32``: best-of-3 wall for 32 independent md5 procs —
-      an absolute host-health number comparable across rounds (healthy
-      window on this VM: ~1.0-1.6 s; throttled evenings: 3-6 s+);
-    * ``probe_speedup_8_to_32`` / ``probe_ratio``: the hardware scaling
-      ceiling (ideal 4.0 / 1.0) that scaling runs normalize by.
-    """
-    import multiprocessing as mp
-
-    from tools.scaling_bench import _md5_work
-
-    def run(n: int) -> float:
-        t0 = time.time()
-        with mp.Pool(n) as p:
-            p.map(_md5_work, range(n))
-        return time.time() - t0
-
-    best = {n: min(run(n) for _ in range(3)) for n in (8, 32)}
-    speedup = 4.0 * best[8] / best[32]
-    return {
-        "probe_sec_32": round(best[32], 3),
-        "probe_sec_8": round(best[8], 3),
-        "probe_speedup_8_to_32": round(speedup, 3),
-        "probe_ratio": round(speedup / 4.0, 3),
-    }
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+MEM = os.environ.get("SPARK_GRAFT_MEM") or host_driver_memory()
+REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "6"))
 
 
 def _session():
@@ -199,7 +36,7 @@ def _session():
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("geoutils_spark_bench")
         .config("spark.sql.shuffle.partitions", str(max(CPUS, 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g"))
+        .config("spark.driver.memory", MEM)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -209,111 +46,38 @@ def _session():
     )
 
 
-def flagship_pipeline(spark, n_pages: int) -> tuple[int, int]:
-    """pages -> extract_text -> geo -> cell/tile -> polygon join.
-
-    The full hot path: JVM string/templating for page synthesis, Arrow-batched
-    text extraction, column-expression cell/tile encode, broadcast cell
-    equi-join, vectorized ray-cast refine.
-
-    Returns (matched_rows, total_text_len). The aggregate over text_len is
-    what FORCES the extraction stage — a bare count() lets Catalyst prune the
-    UDF out entirely and the bench would measure an empty pipeline.
-    """
-    from pyspark.sql import functions as F
-
-    from geoutils_spark.functions.textextract import extract_text_udf
-    from geoutils_spark.operators.spatial_join import spatial_join
-    from geoutils_spark.operators.tiling import with_tiles
-    from geoutils_spark.sources import fixtures
-
-    pages = fixtures.pages_df(spark, n_pages).drop("text")
-    pages = fixtures.with_page_geo(pages)
-    pages = pages.withColumn("text", extract_text_udf(F.col("html")))
-    pages = with_tiles(pages, "lon", "lat", zooms=(14,))
-    polys = fixtures.polygons_df(spark).filter(F.col("kind") == "building")
-    joined = spatial_join(
-        pages.select("page_id", "lon", "lat", "tile_z14_x", "tile_z14_y",
-                     F.length("text").alias("text_len")),
-        polys, level=15, point_cols=("page_id", "text_len"))
-    row = joined.agg(
-        F.count("*").alias("n"), F.sum("text_len").alias("tl")).collect()[0]
-    return row["n"], row["tl"]
-
-
 def main():
     import __spark_entry__ as E
 
+    # Same-window host health: how much of 1 -> CPUS the hardware delivers
+    # to independent CPU-bound processes. Forks, so it runs before the JVM.
+    probe = cpu_scaling_probe(1, CPUS)
     spark = _session()
     spark.sparkContext.setLogLevel("ERROR")
-    qs = E.queries()
     times: dict[str, float] = {}
-
-    # Warmup (untimed): spin up python UDF workers + JIT the hot codegen —
-    # a long-running cluster is warm; first-run effects here are 2-3x and
-    # would swamp query-to-query comparisons. Measured r3 (BENCH/
-    # R03_DELTA.md): this VM's warm-up tail is LONG — full-size reps kept
-    # converging 165s -> 68 -> 43 -> 25 over four reps (kernel-side page/
-    # JIT warmup, sys-time dominated) — so warm up at full N_PAGES and use
-    # enough reps that min-of-reps reads the converged value, with an
-    # early-stop once TWO consecutive reps fail to improve best by >10%
-    # (a warm machine needs ~4 reps total, a cold one up to `reps`).
-    flagship_pipeline(spark, max(N_PAGES // 20, 10_000))
-    flagship_pipeline(spark, N_PAGES)
-
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "6"))
-
-    best = 1e18
-    rep_series: list[float] = []
-    stale = 0  # consecutive reps that failed to improve best by >10%
-    for i in range(reps):
-        t0 = time.time()
-        n_matched, _total_text = flagship_pipeline(spark, N_PAGES)
-        dt = time.time() - t0
-        rep_series.append(round(dt, 3))
-        stale = 0 if dt < best * 0.90 else stale + 1
-        best = min(best, dt)
-        if i >= 2 and stale >= 2:
-            break  # plateau: TWO consecutive reps stopped improving on best
-    times["pipeline_spatial_join"] = round(best, 3)
-    times["pipeline_pages_per_sec"] = round(N_PAGES / best, 1)
-
-    for name in HEADLINE + EXTRA:
-        fn = qs[name]
-        best = 1e18
-        for _ in range(reps):
+    for name, fn in E.queries().items():
+        best = float("inf")
+        for _ in range(REPS):
             t0 = time.time()
-            df = fn(spark, SF_DIR)
-            if name in EXTRA:
-                # noop sink: FORCES full computation of projection-only
-                # queries (count() lets Catalyst prune deterministic
-                # projections — the CLAUDE.md bench invariant). HEADLINE
-                # keeps count() for r01 protocol comparability (those are
-                # aggregates/joins that count() cannot prune).
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
+            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
         times[name] = round(best, 3)
-    total = round(sum(v for k, v in times.items()
-                      if k != "pipeline_pages_per_sec" and k not in EXTRA), 3)
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     try:
         sf = float(sf)
     except ValueError:
         sf = SF_DIR
-    probe = _cpu_probe()
     print(json.dumps({
-        "metric": "spatial_join_tile_assignment_bench",
-        "value": total,
+        "metric": "registry_query_seconds",
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "sf": sf,
-        "pages": N_PAGES,
-        "pipeline_matched_rows": n_matched,
-        "pipeline_reps": rep_series,
+        "reps": REPS,
         "cpus": CPUS,
-        **probe,
+        "driver_memory": MEM,
+        "probe_speedup": round(probe, 3),
+        "probe_ratio": round(probe / CPUS, 3),
     }))
     spark.stop()
 

@@ -228,24 +228,6 @@ def hex_to_cell_col(hexstr: Column) -> Column:
     return F.conv(F.rpad(hexstr, 16, "0"), 16, 10).cast("long")
 
 
-def neighbor_cells_col(cell: Column, level: int, ring: int = 1) -> Column:
-    """Array of cells in the (2*ring+1)^2 neighborhood (incl. self), with
-    x wraparound at the antimeridian and y clamped at the poles. Candidate
-    generator for kNN (SURVEY.md §2.5)."""
-    x, y = cell_to_tile_col(cell, level)
-    n = 1 << level
-    out = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            nx = F.pmod(x + F.lit(dx), F.lit(n))
-            ny = y + F.lit(dy)
-            cellc = cell_from_tile_col(nx, ny, level)
-            out.append(
-                F.when((ny >= 0) & (ny < n), cellc).otherwise(F.lit(None).cast("long"))
-            )
-    return F.array_compact(F.array(*out))
-
-
 # ---------------------------------------------------------------------------
 # DataFrame transformers — stepwise materialization (bounded expression size)
 # ---------------------------------------------------------------------------

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,17 +62,13 @@ def with_covering_cells(df: DataFrame, level: int, bbox: str = "bbox",
         )
     )
     ys = F.sequence(F.col("__y0"), F.col("__y1"))
-    cell_of = lambda x, y: _encode_lambda(x, y, level)  # noqa: E731
+    # Lambda vars are leaf expressions — the 2x-per-step duplication stays tiny.
     df = df.withColumn(
         out,
-        F.flatten(F.transform(xs, lambda x: F.transform(ys, lambda y: cell_of(x, y)))),
+        F.flatten(F.transform(
+            xs, lambda x: F.transform(ys, lambda y: C.cell_from_tile_col(x, y, level)))),
     )
     return df.drop("__x0", "__y0", "__x1", "__y1")
-
-
-def _encode_lambda(x: Column, y: Column, level: int) -> Column:
-    # Lambda vars are leaf expressions — the 2x-per-step duplication stays tiny.
-    return C.cell_from_tile_col(x, y, level)
 
 
 # ---------------------------------------------------------------------------
@@ -194,24 +190,8 @@ def spatial_join(points: DataFrame, polygons: DataFrame, level: int,
       (/root/reference/osmsplit/mapsplit.h:65-88).
     """
     pts = C.with_cell(points, lon, lat, level, "cell_id")
-    ring_cols, refine_udf = _poly_refine(polygons)
-    polys = with_covering_cells(polygons, level)
-    polys = polys.select(
-        "way_id", F.explode("cells").alias("cell_id"), *ring_cols,
-    )
-    if n_salt > 1:
-        pts = pts.withColumn("__salt", F.pmod(F.xxhash64(*point_cols), F.lit(n_salt)))
-        polys = polys.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-        keys = ["cell_id", "__salt"]
-    else:
-        keys = ["cell_id"]
-    right = F.broadcast(polys) if broadcast_polygons else polys
-    joined = pts.join(right, on=keys, how="inner")
-    if exact:
-        joined = joined.filter(
-            refine_udf(F.col(lon), F.col(lat), F.col("__rx"), F.col("__ry"))
-        )
-    return joined.select(*point_cols, "way_id", "cell_id")
+    return _join_prepared(pts, polygons, level, lon, lat, point_cols,
+                          broadcast_polygons, exact, n_salt)
 
 
 def spatial_join_adaptive(points: DataFrame, polygons: DataFrame,
@@ -253,14 +233,23 @@ def spatial_join_adaptive(points: DataFrame, polygons: DataFrame,
 
 def _join_prepared(pts: DataFrame, polygons: DataFrame, level: int,
                    lon: str, lat: str, point_cols: tuple,
-                   broadcast_polygons: bool, exact: bool) -> DataFrame:
+                   broadcast_polygons: bool, exact: bool,
+                   n_salt: int = 0) -> DataFrame:
+    """Join points that already carry ``cell_id`` at ``level`` to the
+    polygons' covering cells, then refine exactly (see ``spatial_join``)."""
     ring_cols, refine_udf = _poly_refine(polygons)
     polys = with_covering_cells(polygons, level)
     polys = polys.select(
         "way_id", F.explode("cells").alias("cell_id"), *ring_cols,
     )
+    if n_salt > 1:
+        pts = pts.withColumn("__salt", F.pmod(F.xxhash64(*point_cols), F.lit(n_salt)))
+        polys = polys.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        keys = ["cell_id", "__salt"]
+    else:
+        keys = ["cell_id"]
     right = F.broadcast(polys) if broadcast_polygons else polys
-    joined = pts.join(right, on="cell_id", how="inner")
+    joined = pts.join(right, on=keys, how="inner")
     if exact:
         joined = joined.filter(
             refine_udf(F.col(lon), F.col(lat), F.col("__rx"), F.col("__ry"))

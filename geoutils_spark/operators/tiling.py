@@ -1,12 +1,10 @@
-"""Tile assignment + per-cell partitioned sink.
+"""Tile and cell assignment.
 
 The engine's analog of osms2split: every record is assigned its level-L cell
 (file naming `s2_<hex16>`, /root/reference/osms2split/src/s2splitter.cpp:60-72)
 and its slippy z/x/y map tiles (same Mercator math the reference uses to
 project geometry, /root/reference/osm2assimp/convertlatlng.cpp:27-35).
-Output is written partitioned by cell — the shuffle *is* the reference's
-per-cell in-memory buffer map (s2splitter.h:58-64), with Spark handling spill
-and parallel writes instead of an unordered_map.
+The per-cell partitioned sink is ``sources.sinks.write_partitioned_by_cell``.
 """
 
 from __future__ import annotations
@@ -35,16 +33,3 @@ def with_cell_assignment(df: DataFrame, lon: str, lat: str, level: int,
                            C.cell_parent_col(F.col("cell_id"), parent_level))
     return df
 
-
-def write_partitioned_by_cell(df: DataFrame, path: str, partition_level: int,
-                              cell_col: str = "cell_id",
-                              mode: str = "overwrite") -> None:
-    """Per-cell partitioned sink (reference S5): one directory partition per
-    *parent* cell at ``partition_level`` so file counts stay sane while leaf
-    cell ids remain queryable; repartition-by-key first so exactly one task
-    writes each partition (replaces the reference's mutex-guarded writers,
-    /root/reference/osmsplit/osmsplitwriter.cpp:17-48 — locks vanish into the
-    shuffle)."""
-    part = C.cell_parent_col(F.col(cell_col), partition_level)
-    out = df.withColumn("cell_part", part).repartition("cell_part")
-    out.write.mode(mode).partitionBy("cell_part").parquet(path)

@@ -7,10 +7,11 @@ two cluster sizes):
 * **Input from parquet, not in-memory synthesis** — the deployment reads an
   Iceberg/parquet pages table; the fixture table is materialized once,
   untimed, and both runs read the same files.
-* **CPU pinning via taskset** — ``local[8]`` without pinning is NOT an
-  8-core cluster: its Python UDF workers would spill onto the other 24 idle
-  cores. The low run is pinned to cpus 0-7, the high run to 0-31, so total
-  machine resources really differ 4x.
+* **CPU pinning via taskset** — ``local[1]`` without pinning is NOT a
+  1-core cluster: its Python UDF workers would spill onto the other idle
+  cores. The low run is pinned to cpu 0, the high run to every core of the
+  host (``--low 1 --high <nproc>`` by default), so total machine resources
+  really differ by that ratio.
 * **Warm steady state, best-of-reps** — a long-running cluster has warm
   python workers and JIT'd code; rep 1 pays that cost and is excluded by
   taking the best.
@@ -19,6 +20,7 @@ two cluster sizes):
   default 128m gives the same shape).
 
 Usage: python tools/scaling_bench.py [--pages 8000000] [--reps 3]
+                                    [--low 1] [--high <nproc>]
 """
 
 from __future__ import annotations
@@ -32,6 +34,15 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+
+def host_driver_memory() -> str:
+    """Spark driver heap sized to the host: half of MemTotal, the rest left
+    to the Python workers and the page cache."""
+    from perfbench.host import mem_total_gb  # imports this module's _md5_work
+
+    return f"{max(1, int(mem_total_gb() / 2))}g"
 
 
 def cpu_scaling_probe(low: int, high: int) -> float:
@@ -73,11 +84,10 @@ def _md5_work(_: int) -> int:
 def materialize_pages(n: int, path: str) -> None:
     from pyspark.sql import SparkSession
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.driver.memory", "24g")
+    spark = (SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
+             .config("spark.driver.memory", host_driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, REPO)
     from geoutils_spark.sources import fixtures
 
     fixtures.pages_df(spark, n).drop("text").write.mode("overwrite").parquet(path)
@@ -90,7 +100,7 @@ def run_once(cores: int, cpu_list: str, input_path: str, reps: int,
         "taskset", "-c", cpu_list,
         "spark-submit",
         "--master", f"local[{cores}]",
-        "--conf", "spark.driver.memory=24g",
+        "--conf", f"spark.driver.memory={host_driver_memory()}",
         "--conf", f"spark.sql.shuffle.partitions={max(cores, 8)}",
         "--conf", "spark.sql.files.maxPartitionBytes=4m",
         "--conf", "spark.sql.adaptive.enabled=true",
@@ -111,8 +121,8 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=8_000_000)
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--low", type=int, default=8)
-    ap.add_argument("--high", type=int, default=32)
+    ap.add_argument("--low", type=int, default=1)
+    ap.add_argument("--high", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--keep-input", action="store_true")
     ap.add_argument("--high-first", action="store_true",
                     help="run the local[high] leg before local[low] — "
